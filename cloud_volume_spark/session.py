@@ -2,8 +2,8 @@
 
 Replaces the reference's hand-rolled execution stack (thread pools,
 green threads, multiprocess fan-out — ``threaded_queue.py``,
-``scheduler.py``) with Spark's scheduler. Defaults are sized for
-local[32] testing but the knobs are the ones that matter on a
+``scheduler.py``) with Spark's scheduler. Local defaults are sized
+from the host (cores, RAM), and the knobs are the ones that matter on a
 1000-executor cluster: AQE on (runtime re-plan, skew-join splitting),
 Arrow on (pandas-UDF batches), shuffle partitions bounded by AQE
 coalescing.
@@ -14,6 +14,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory_for(total_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``total_bytes``
+    of RAM: about 60% of it, capped at 48g, at least 1g. In local mode
+    the driver JVM also hosts every executor thread, so its heap must
+    leave room for the Python workers, off-heap Arrow/Netty buffers and
+    the OS; a fixed 48g heap on a smaller host lets the JVM grow until
+    the kernel kills it."""
+    return f"{max(1, min(48, int(total_bytes * 0.6) >> 30))}g"
+
+
+def host_memory_bytes(meminfo: str = "/proc/meminfo") -> int:
+    """Physical RAM: ``MemTotal`` from ``meminfo``, else the POSIX page
+    count (hosts without procfs)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
 
 def get_spark(
@@ -55,10 +78,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # local-mode driver hosts all executor threads — size the heap
-        # for 32 concurrent codec tasks on multi-MB chunk blobs
+        # local-mode driver hosts all executor threads: the heap takes
+        # most of the host (see driver_memory_for), never all of it
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or driver_memory_for(host_memory_bytes()),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # r14 (guide §4.2): bound Arrow batches by BYTES, not rows —

@@ -8,15 +8,20 @@ A volume is a partitioned Parquet dataset of chunk rows plus a JSON
            blob BINARY, labels_stats ARRAY<LONG>)
 
 Layout & scale design:
-- Partition directories on ``(mip, slab)`` where ``slab = morton >> 6``
-  (64 spatially-adjacent chunks per slab, Z-order clustered). Bbox
-  reads prune on slab ranges via min/max parquet stats + the
+- Immutable data directories per ``(mip, slab)`` where ``slab = morton
+  >> 6`` (64 spatially-adjacent chunks per slab, Z-order clustered),
+  published through a numbered snapshot-manifest log. Bbox reads prune
+  on slab ranges via the manifest, min/max parquet stats and the
   ``cx/cy/cz BETWEEN`` predicates Catalyst pushes to the scan; writes
-  rewrite only the touched slabs (dynamic partition overwrite) — the
+  rewrite only the touched slabs into fresh directories — the
   copy-on-write unit is bounded, unlike a whole-table rewrite, so the
-  design survives 100 TB volumes. A production deployment would swap
-  the slab-overwrite for a table format's row-level MERGE; semantics
-  here are identical.
+  design survives 100 TB volumes.
+- Writes of driver-resident arrays (:meth:`Volume.upload` and its
+  variants) are staged on the driver: pyarrow reads, merges and
+  rewrites each touched slab through :class:`PathOps`, with no Spark
+  job. DataFrame writes (:meth:`Volume.write_blocks_df`, downsample,
+  imports) stage through Spark. Both publish through one commit path
+  (:meth:`Volume._commit_staged`).
 - ``labels_stats`` (distinct labels per chunk, capped) is written at
   ingest for segmentation layers: ``unique``/``contains`` queries read
   the stats column instead of decoding blobs — the Spark analog of the
@@ -38,6 +43,7 @@ reduction, which the reference delegates to Igneous).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -204,6 +210,14 @@ def _block_reduce(arr: np.ndarray, factor, seg: bool) -> np.ndarray:
 
 def _slab_of(morton: int, shift: int = SLAB_SHIFT) -> int:
     return int(morton) >> int(shift)
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_chunk_schema():
+    """CHUNK_SCHEMA as the Arrow schema Spark's parquet writer stores."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(CHUNK_SCHEMA)
 
 
 class Volume:
@@ -1095,7 +1109,7 @@ class Volume:
             deleted_keys = set(
                 bbox.grid_coords(cs, voff)
             ) - {(r[2], r[3], r[4]) for r in rows}
-        self._commit_rows(rows, mip, bbox, extra_deletes=deleted_keys)
+        self._commit_rows(rows, mip, extra_deletes=deleted_keys)
 
     def upload_with_overwrite_partial_chunks(
         self, arr: np.ndarray, offset, mip: int = 0, compression="gzip"
@@ -1111,21 +1125,24 @@ class Volume:
         )
         shade(padded, aligned, arr, bbox)
         rows = self._chunk_rows(padded, aligned.minpt, mip, compression)
-        self._commit_rows(rows, mip, aligned)
+        self._commit_rows(rows, mip)
 
-    def _commit_rows(
-        self,
-        rows: list,
-        mip: int,
-        bbox: Bbox,
-        extra_deletes: Optional[set] = None,
-    ) -> None:
-        """Merge new chunk rows into the table, rewriting only touched
-        ``(mip, slab)`` partitions (dynamic partition overwrite)."""
-        new_df = self.spark.createDataFrame(rows, schema=CHUNK_SCHEMA)
-        write_slabs = {r[1] for r in rows}
+    def _commit_rows(self, rows: list, mip: int,
+                     extra_deletes: Optional[set] = None) -> None:
+        """Commit chunk rows built on the driver (:meth:`_chunk_rows`):
+        they replace the chunks at their keys, ``extra_deletes`` keys
+        are removed, and only the touched ``(mip, slab)`` datasets are
+        rewritten. The rows already live on the driver, so on a
+        manifest table they are staged there too (:meth:`_stage_rows`:
+        pyarrow through :class:`PathOps`, no Spark job) — the
+        client-side read-modify-write of the reference
+        (``tx.upload:140-191``). DataFrame writes stage through Spark
+        (:meth:`_stage_commit`); both publish via :meth:`_commit_staged`.
+        Legacy hive tables keep the Spark merge
+        (:meth:`_merge_rows_legacy`)."""
         replaced = {(r[2], r[3], r[4]) for r in rows}
-        # slabs holding delete-only keys must be scanned too, or an
+        write_slabs = {r[1] for r in rows}
+        # slabs holding delete-only keys are rewritten too, or an
         # all-black rewrite leaves the stale chunk in place
         delete_slabs: set = set()
         if extra_deletes:
@@ -1136,45 +1153,161 @@ class Volume:
                          self.slab_shift)
                 for c in extra_deletes
             }
-        touched_slabs = sorted(write_slabs | delete_slabs)
+        touched = sorted(write_slabs | delete_slabs)
 
-        # lock BEFORE the read snapshot: the survivors listing must see
+        # lock BEFORE the read snapshot: the survivors read must see
         # every previously-committed slab swap, or a concurrent
         # read-modify-write silently drops the other writer's chunks
         with self._commit_lock():
-            if self._fs.exists(self.chunks_path):
-                # resolve the snapshot ONCE: the survivors read and the
-                # publish CAS must share a generation, or a stale
-                # snapshot could publish over an interloper's commit
-                man0 = self._read_manifest()
-                existing = self.chunks_df(mip=int(mip), slabs=touched_slabs,
-                                          manifest=man0)
-                # drop rows being replaced (or deleted) — key anti-join
-                keys = self.spark.createDataFrame(
-                    [(int(mip), int(cx), int(cy), int(cz)) for (cx, cy, cz) in replaced],
-                    schema="mip int, cx int, cy int, cz int",
-                )
-                survivors = existing.join(
-                    F.broadcast(keys), on=["mip", "cx", "cy", "cz"], how="left_anti"
-                )
-                out = survivors.unionByName(new_df)
-                drop: list = []
-                cached = bool(delete_slabs - write_slabs)
-                try:
-                    if cached:
-                        # delete-only slabs with no survivors produce no
-                        # output partition — remove their dirs explicitly
-                        out = out.cache()
-                        live = {
-                            r.slab for r in out.select("slab").distinct().collect()
-                        }
-                        drop = [(mip, s) for s in (delete_slabs - write_slabs) - live]
-                    self._overwrite_slabs(out, drop=drop, snapshot=man0)
-                finally:
-                    if cached:
-                        out.unpersist()
-            else:
-                self._overwrite_slabs(new_df)
+            if self._is_legacy_layout():
+                self._merge_rows_legacy(rows, mip, touched, replaced,
+                                        delete_slabs - write_slabs)
+                return
+            self._commit_staged(
+                lambda commit_id, man: self._stage_rows(
+                    rows, int(mip), touched, replaced, man, commit_id))
+
+    def _merge_rows_legacy(self, rows: list, mip: int, touched: list,
+                           replaced: set, delete_only: set) -> None:
+        """The Spark merge behind :meth:`_commit_rows` on a hive-layout
+        table: anti-join the touched slabs against the replaced keys,
+        union the new rows and rewrite the slabs. Caller holds the
+        commit lock."""
+        new_df = self.spark.createDataFrame(rows, schema=CHUNK_SCHEMA)
+        existing = self.chunks_df(mip=int(mip), slabs=touched)
+        keys = self.spark.createDataFrame(
+            [(int(mip), int(cx), int(cy), int(cz)) for (cx, cy, cz) in replaced],
+            schema="mip int, cx int, cy int, cz int",
+        )
+        survivors = existing.join(
+            F.broadcast(keys), on=["mip", "cx", "cy", "cz"], how="left_anti"
+        )
+        out = survivors.unionByName(new_df)
+        drop: list = []
+        try:
+            if delete_only:
+                # delete-only slabs with no survivors produce no output
+                # partition — remove their dirs explicitly
+                out = out.cache()
+                live = {r.slab for r in out.select("slab").distinct().collect()}
+                drop = [(mip, s) for s in delete_only - live]
+            self._overwrite_slabs(out, drop=drop)
+        finally:
+            if delete_only:
+                out.unpersist()
+
+    def _stage_rows(self, rows: list, mip: int, slabs: list, replaced: set,
+                    man: Optional[dict], commit_id: str) -> tuple:
+        """Driver-side staging for :meth:`_commit_rows`, one slab at a
+        time: read the snapshot's slab (:meth:`_read_slab`), drop the
+        ``replaced`` keys, append the slab's new rows, sort by morton
+        and write ``data/<commit_id>/pm=M/ps=S/part-00000.parquet``
+        (:meth:`_slab_parquet`). Returns ``(staged, drop)`` for
+        :meth:`_commit_staged`; a slab left with no rows is dropped
+        from the manifest."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        schema = _arrow_chunk_schema()
+        cols = list(zip(*rows)) or [()] * len(schema)
+        new = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema)
+        entries = man["entries"] if man else {}
+        staged, drop = {}, []
+        for s in slabs:
+            key = f"{mip}/{s}"
+            tbl = self._merge_slab(new.filter(pc.equal(new["slab"], s)),
+                                   entries.get(key), replaced)
+            if not tbl.num_rows:
+                drop.append((mip, s))
+                continue
+            rel = f"data/{commit_id}/pm={mip}/ps={s}"
+            self._fs.write_bytes(f"{self.chunks_path}/{rel}/part-00000.parquet",
+                                 self._slab_parquet(tbl))
+            staged[key] = rel
+        return staged, drop
+
+    def _merge_slab(self, new, rel: Optional[str], replaced: set):
+        """``new`` rows plus the rows of the committed slab dir ``rel``
+        (None: the slab does not exist yet) whose keys are not in
+        ``replaced``, sorted by morton. The result is zero-copy slices
+        of its inputs — runs of consecutive rows — so no blob is copied
+        before the parquet writer reads it."""
+        import pyarrow as pa
+
+        tbl, keep = new, [True] * new.num_rows
+        if rel is not None:
+            old = self._read_slab(rel)
+            keep += [k not in replaced for k in zip(
+                *(old[c].to_pylist() for c in ("cx", "cy", "cz")))]
+            tbl = pa.concat_tables([new, old])
+        idx = np.flatnonzero(keep)
+        idx = idx[np.argsort(tbl["morton"].to_numpy()[idx], kind="stable")]
+        starts = np.flatnonzero(np.diff(idx, prepend=-2) != 1)
+        ends = np.append(starts[1:], len(idx))
+        return pa.concat_tables(
+            [tbl.slice(0, 0)]
+            + [tbl.slice(idx[a], b - a) for a, b in zip(starts, ends)])
+
+    def _read_slab(self, rel: str):
+        """One committed slab dir as an Arrow table of CHUNK_SCHEMA,
+        read through :class:`PathOps` — the survivors read of
+        :meth:`_stage_rows`. Files Spark's reader skips (``_``/``.``
+        prefixed) are skipped; a referenced dir holding no parquet file
+        is a storage fault, never an empty slab."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = _arrow_chunk_schema()
+        root = f"{self.chunks_path}/{rel}"
+        parts = [
+            pq.read_table(pa.BufferReader(self._fs.read_bytes(f"{root}/{n}")),
+                          columns=schema.names).cast(schema)
+            for n in sorted(self._fs.listdir(root))
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        ]
+        if not parts:
+            raise ManifestError(
+                f"slab dir {root!r} is referenced by the manifest but "
+                "holds no parquet file (reclaimed or partially deleted) "
+                "— run fsck(); committing would silently drop its chunks")
+        return pa.concat_tables(parts)
+
+    def _slab_parquet(self, tbl):
+        """One slab's morton-sorted rows as a parquet file buffer, laid
+        out the way :meth:`_stage_commit` writes them: uncompressed
+        (blobs carry their own codec), one row group per
+        :meth:`_commit_bucket` morton bucket so point reads and
+        cutouts keep row-group pruning inside large slabs, and no
+        statistics on ``blob``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        bucket = tbl["morton"].to_numpy() >> self._commit_bucket_shift()
+        cuts = [0, *(np.flatnonzero(np.diff(bucket)) + 1).tolist(),
+                tbl.num_rows]
+        sink = pa.BufferOutputStream()
+        with pq.ParquetWriter(
+                sink, tbl.schema, compression="none", use_dictionary=False,
+                write_statistics=[n for n in tbl.schema.names
+                                  if n != "blob"]) as w:
+            for a, b in zip(cuts, cuts[1:]):
+                w.write_table(tbl.slice(a, b - a), row_group_size=b - a)
+        return sink.getvalue()
+
+    def _commit_bucket_shift(self) -> int:
+        """``log2`` of the chunks per commit bucket: the smallest power
+        of two (at most a slab) holding ~16 MB of decoded chunk data."""
+        info = self.info
+        chunk_bytes = int(
+            np.prod(info.chunk_size(0))
+        ) * info.dtype.itemsize * info.num_channels
+        bucket_chunks = 1
+        while bucket_chunks < (1 << self.slab_shift) and \
+                bucket_chunks * max(chunk_bytes, 1) < (16 << 20):
+            bucket_chunks *= 2
+        return bucket_chunks.bit_length() - 1
 
     def _commit_bucket(self):
         """Shuffle key for commit writes: ``morton >> k`` where ``k``
@@ -1184,34 +1317,48 @@ class Volume:
         ``repartition("slab")`` alone collapses a one-slab write to a
         single task. Hash-based, so no sampling pass over the (possibly
         expensive-to-recompute) encode stage, unlike repartitionByRange."""
-        info = self.info
-        chunk_bytes = int(
-            np.prod(info.chunk_size(0))
-        ) * info.dtype.itemsize * info.num_channels
-        bucket_chunks = 1
-        while bucket_chunks < (1 << self.slab_shift) and \
-                bucket_chunks * max(chunk_bytes, 1) < (16 << 20):
-            bucket_chunks *= 2
-        shift = bucket_chunks.bit_length() - 1
-        return F.shiftrightunsigned(F.col("morton"), shift)
+        return F.shiftrightunsigned(F.col("morton"),
+                                    self._commit_bucket_shift())
 
     def _overwrite_slabs(self, out: DataFrame, drop: Optional[Iterable[tuple]] = None,
                          replace_mips: Optional[Iterable[int]] = None,
                          snapshot=_UNRESOLVED) -> None:
-        """Snapshot commit: write the touched ``(mip, slab)`` datasets
-        as IMMUTABLE dirs under ``chunks/data/<commit-id>``, then
-        publish the next numbered manifest generation. The rewrite unit
-        is the slab, never the table; readers holding a previous
-        manifest keep a consistent snapshot (their dirs are never
-        touched — old generations are reclaimed by :meth:`vacuum`).
-        ``drop`` lists (mip, slab) partitions whose every row was
-        deleted; ``replace_mips`` drops EVERY previous entry of those
-        mips (full-mip rewrites: remap). ``snapshot`` is the manifest a
-        READ-MODIFY-WRITE caller resolved for its survivors read — the
-        publish compare-and-sets against THAT generation, so a
-        survivors set computed from a stale snapshot can never publish
-        (write-only commits leave it unset and resolve here, under the
-        lock).
+        """Commit a DataFrame of CHUNK_SCHEMA rows: stage it through
+        Spark (:meth:`_stage_commit`) and publish via
+        :meth:`_commit_staged`. ``drop`` lists (mip, slab) partitions
+        whose every row was deleted; ``replace_mips`` drops EVERY
+        previous entry of those mips (full-mip rewrites: remap).
+        ``snapshot`` is the manifest a READ-MODIFY-WRITE caller
+        resolved for its survivors read — the publish compare-and-sets
+        against THAT generation, so a survivors set computed from a
+        stale snapshot can never publish (write-only commits leave it
+        unset and resolve under the lock).
+
+        Tables created before the manifest (hive ``mip=``/``slab=``
+        layout) commit through the legacy rename-swap path unchanged."""
+        with self._commit_lock():
+            if self._is_legacy_layout():
+                self._lru_clear()
+                self._overwrite_slabs_legacy(out, drop, replace_mips)
+                return
+            self._commit_staged(
+                lambda commit_id, _man: (self._stage_commit(out, commit_id),
+                                         list(drop or ())),
+                replace_mips=replace_mips, snapshot=snapshot)
+
+    def _commit_staged(self, stage, replace_mips: Optional[Iterable[int]] = None,
+                       snapshot=_UNRESOLVED) -> None:
+        """THE manifest commit every writer shares: ``stage(commit_id,
+        man)`` writes the touched ``(mip, slab)`` datasets as IMMUTABLE
+        dirs under ``chunks/data/<commit_id>`` and returns ``(staged,
+        drop)`` — manifest entries {"M/S": reldir} to set and (mip,
+        slab) entries to remove — then the next numbered manifest
+        generation publishes. The rewrite unit is the slab, never the
+        table; readers holding a previous manifest keep a consistent
+        snapshot (their dirs are never touched — old generations are
+        reclaimed by :meth:`vacuum`). ``man`` is the snapshot the
+        publish compare-and-sets against: ``snapshot`` when the caller
+        resolved one, else the manifest read here, under the lock.
 
         All path manipulation routes through :class:`PathOps` (Hadoop
         FileSystem for s3a/gs/hdfs/file URIs, os/shutil for plain local
@@ -1223,15 +1370,9 @@ class Volume:
         without touching the table if another writer holds it; the
         numbered-file publish (create-if-absent of generation N+1)
         additionally turns any broken-stale-lock interleave into a
-        loud conflict.
-
-        Tables created before the manifest (hive ``mip=``/``slab=``
-        layout) commit through the legacy rename-swap path unchanged."""
+        loud conflict."""
         self._lru_clear()
         with self._commit_lock():
-            if self._is_legacy_layout():
-                self._overwrite_slabs_legacy(out, drop, replace_mips)
-                return
             man = self._read_manifest() if snapshot is Volume._UNRESOLVED \
                 else snapshot
             self._require_slab_shift(man)
@@ -1239,12 +1380,12 @@ class Volume:
             old_entries = dict(man["entries"]) if man else {}
             entries = dict(old_entries)
             commit_id = f"commit-{uuid.uuid4().hex[:12]}"
-            staged = self._stage_commit(out, commit_id)
+            staged, drop = stage(commit_id, man)
             for m in (replace_mips or ()):
                 prefix = f"{int(m)}/"
                 entries = {k: v for k, v in entries.items()
                            if not k.startswith(prefix)}
-            for (m, s) in (drop or ()):
+            for (m, s) in drop:
                 entries.pop(f"{int(m)}/{int(s)}", None)
             entries.update(staged)
             self._publish_manifest(entries, expect_generation=gen,
@@ -2523,7 +2664,7 @@ class Volume:
         return self.chunks_path + ".commit-lock"
 
     def _commit_lock(self):
-        """Exclusive whole-table commit lock (see _overwrite_slabs).
+        """Exclusive whole-table commit lock (see _commit_staged).
 
         Re-entrant within one THREAD of one Volume instance so the
         commit entry points (_commit_rows, delete_region, apply_remap,

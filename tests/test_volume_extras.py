@@ -225,8 +225,10 @@ def test_concurrent_commit_conflict_detected(spark, tmp_path):
 def test_commit_lock_precedes_read_snapshot(spark, tmp_path, monkeypatch):
     """The lost-update fix: while another writer holds the lock, a
     read-modify-write commit must fail BEFORE capturing its survivors
-    snapshot — a pre-lock file listing would stage survivors that miss
-    the other writer's swap and erase its commit."""
+    snapshot — a pre-lock read would stage survivors that miss the
+    other writer's swap and erase its commit. The guard wraps the
+    commit's survivors read (``_read_slab``) and the manifest read,
+    and records whether the lock was held at each call."""
     import numpy as np
 
     from cloud_volume_spark.volume import CommitConflictError, Volume as V
@@ -237,22 +239,35 @@ def test_commit_lock_precedes_read_snapshot(spark, tmp_path, monkeypatch):
     lock = vol._commit_lock_path
     assert vol._fs.create_exclusive(lock)
 
-    snapshots = []
-    orig = V.chunks_df
+    reads = []
+    orig_slab, orig_man = V._read_slab, V._read_manifest
 
-    def guard(self):
-        snapshots.append(1)
-        return orig(self)
+    def held(self):
+        return getattr(self._lock_tls, "depth", 0) > 0
 
-    monkeypatch.setattr(V, "chunks_df", guard)
+    def guard_slab(self, rel):
+        reads.append(("slab", held(self)))
+        return orig_slab(self, rel)
+
+    def guard_man(self):
+        reads.append(("manifest", held(self)))
+        return orig_man(self)
+
+    monkeypatch.setattr(V, "_read_slab", guard_slab)
+    monkeypatch.setattr(V, "_read_manifest", guard_man)
     patch = np.zeros((32, 32, 32, 1), dtype=np.uint32)
     with pytest.raises(CommitConflictError, match="commit lock"):
         vol.upload(patch, offset=(0, 0, 0))
-    assert not snapshots, "snapshot read before lock acquisition"
+    assert not reads, f"snapshot read before lock acquisition: {reads}"
 
-    monkeypatch.setattr(V, "chunks_df", orig)
     vol._fs.remove(lock)
+    reads.clear()
     vol.upload(patch, offset=(0, 0, 0))  # succeeds after release
+    # the guard is live: the commit read its survivors, and every
+    # snapshot read of the commit happened under the lock
+    assert ("slab", True) in reads and ("manifest", True) in reads
+    assert all(under_lock for _, under_lock in reads), reads
+    monkeypatch.undo()
     out = vol.cutout(Bbox((0, 0, 0), (32, 32, 32)))
     assert np.array_equal(out, patch)
 
@@ -335,6 +350,14 @@ def _mk_vol(spark, tmp_path, name, n=64, cs=32):
     arr = np.arange(n * n * n, dtype=np.uint32).reshape(n, n, n, 1)
     return arr, Volume.from_numpy(
         spark, arr, str(tmp_path / name), chunk_size=(cs, cs, cs))
+
+
+def _restage_through_spark(vol):
+    """Rewrite every slab through the Spark stager. Driver-array
+    uploads write one file per slab; DataFrame commits follow
+    ``_commit_bucket``, so with a per-chunk bucket patched in this
+    fragments each slab into many files (work for compact())."""
+    vol._overwrite_slabs(vol.chunks_df())
 
 
 def test_manifest_snapshot_isolation(spark, tmp_path):
@@ -1497,6 +1520,7 @@ def test_compact_single_file_per_slab_and_cdf_silence(
         arr = np.arange(64 ** 3, dtype=np.uint32).reshape(64, 64, 64, 1)
         vol = Volume.from_numpy(spark, arr, str(tmp_path / "cmp"),
                                 chunk_size=(16, 16, 16))
+        _restage_through_spark(vol)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -1551,6 +1575,7 @@ def test_compact_does_not_trigger_incremental_downsample(
                    "false")
     try:
         arr, vol = _mk_vol(spark, tmp_path, "cmpd", n=64, cs=8)
+        _restage_through_spark(vol)
         vol.downsample()
     finally:
         spark.conf.set(
@@ -1585,6 +1610,7 @@ def test_repair_feed_backfills_compaction_without_predecessor(
                    "false")
     try:
         _, vol = _mk_vol(spark, tmp_path, "cmpr", n=64, cs=16)
+        _restage_through_spark(vol)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -1851,6 +1877,7 @@ def test_compact_crash_before_publish_leaves_table_intact(
                    "false")
     try:
         arr, vol = _mk_vol(spark, tmp_path, "cmpcrash", n=64, cs=16)
+        _restage_through_spark(vol)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -2074,6 +2101,7 @@ def test_stream_ingest_interleaves_with_live_compact(
                    "false")
     try:
         vol.upload(arr, offset=(0, 0, 0))
+        _restage_through_spark(vol)
     finally:
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", "true")
